@@ -144,15 +144,19 @@ def global_topk(
     at 10k scan partitions = 500k narrow rows), so the single-task final
     window is structurally bounded — this is the standard distributed
     top-k shape, not a data-sized funnel."""
-    tag = "_gtk_pid"
+    tag, local_rank = "_gtk_pid", "_gtk_rank"
     while tag in df.columns:
         tag += "_"
+    while local_rank in df.columns:
+        local_rank += "_"
+    # the local rank gets its own temp name: writing it to rank_col would
+    # overwrite (and then drop) an input column that order_cols may use
     w_local = W.partitionBy(tag).orderBy(*order_cols)
     survivors = (
         df.withColumn(tag, F.spark_partition_id())
-        .withColumn(rank_col, F.row_number().over(w_local))
-        .filter(F.col(rank_col) <= k)
-        .drop(tag, rank_col)
+        .withColumn(local_rank, F.row_number().over(w_local))
+        .filter(F.col(local_rank) <= k)
+        .drop(tag, local_rank)
     )
     # repartition(1) gives SinglePartition, which satisfies the final
     # window's clustering outright — the window adds NO further exchange,

@@ -7,7 +7,8 @@ job shape onto Spark's lower-level API.
     input pairs -> flatMap(user map, 0..N emits)      # Map + Emit2
                 -> groupByKey()                        # shuffle, full value list
                 -> flatMap(user reduce, 0..N emits)    # Reduce + Emit3
-                -> sortBy(output key)                  # global k3 sort
+                -> collect()                           # output vector
+                -> sorted(by output key) on the driver # global k3 sort
 
 The DataFrame adapter (``plans/map_reduce.py``) is the production path —
 Catalyst/Tungsten optimize it and Arrow batches the Python boundary. This
@@ -52,6 +53,10 @@ def run_map_reduce(
     semantics, NULL (None) values legal. Returns the collected output vector
     like ``get_result()`` (``MRFCore.cpp:465``) — for large outputs prefer
     the DataFrame adapter, which returns a distributed frame instead.
+
+    The output is collected anyway, so it is sorted on the driver (once,
+    like the reference's final sort): an RDD ``sortBy`` would add a
+    sampling job that re-runs every Reduce, plus a range shuffle.
     """
     sc = spark.sparkContext
     rdd = sc.parallelize(list(items), numSlices=parallelism or sc.defaultParallelism)
@@ -59,6 +64,5 @@ def run_map_reduce(
         rdd.flatMap(lambda kv: map_fn(kv[0], kv[1]))
         .groupByKey()
         .flatMap(lambda kv: reduce_fn(kv[0], list(kv[1])))
-        .sortBy(lambda kv: kv[0])
     )
-    return out.collect()
+    return sorted(out.collect(), key=lambda kv: kv[0])

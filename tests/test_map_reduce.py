@@ -41,6 +41,10 @@ def words_df(spark):
 
 
 def test_wordcount_matches_simulator(spark, words_df):
+    """Also: one action calls Reduce exactly once per key, so the final sort
+    must not re-run the reduce stage (MRFCore.cpp:418-420 sorts once)."""
+    calls = spark.sparkContext.accumulator(0)
+
     def py_map(item):
         return [(tok, 1) for tok in item["text"].split(" ") if tok]
 
@@ -58,6 +62,7 @@ def test_wordcount_matches_simulator(spark, words_df):
             yield pd.DataFrame({"k2": toks.to_numpy(), "v2": 1})
 
     def reduce_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        calls.add(1)
         return pd.DataFrame({"k3": [pdf["k2"].iloc[0]], "v3": [int(pdf["v2"].sum())]})
 
     out = map_reduce(
@@ -69,6 +74,7 @@ def test_wordcount_matches_simulator(spark, words_df):
         sort_cols=("k3",),
     ).collect()
     assert [(r.k3, r.v3) for r in out] == expected
+    assert calls.value == len(expected)
 
 
 def test_flat_map_zero_and_many_emits(spark):

@@ -2,17 +2,24 @@
 
 from __future__ import annotations
 
+import uuid
+
 from mapreducefw_spark.plans.map_reduce_rdd import run_map_reduce
 from tests.test_map_reduce import simulate
 
 
 def test_rdd_wordcount_matches_simulator(spark):
+    """Also: Reduce runs once per key and the whole call is ONE Spark job —
+    no sampling job for a distributed sort that would re-run the reduce."""
+    sc = spark.sparkContext
+    calls = sc.accumulator(0)
     items = [("d1", "a b a"), ("d2", "b c"), ("d3", ""), ("d4", "a a a")]
 
     def map_fn(k1, v1):
         return [(tok, 1) for tok in v1.split(" ") if tok]
 
     def reduce_fn(k2, values):
+        calls.add(1)
         return [(k2, sum(values))]
 
     expected = simulate(
@@ -20,8 +27,17 @@ def test_rdd_wordcount_matches_simulator(spark):
         lambda item: map_fn(item["k"], item["v"]),
         reduce_fn,
     )
-    got = run_map_reduce(spark, items, map_fn, reduce_fn)
+    calls.value = 0  # the simulator ran reduce_fn on the driver
+    group = f"rdd-wordcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        got = run_map_reduce(spark, items, map_fn, reduce_fn)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
     assert got == expected
+    assert calls.value == len(expected)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_rdd_search_workload_null_values(spark):

@@ -71,3 +71,18 @@ def test_global_topk_name_collision_guard(spark):
     df = _fixture(spark).withColumn("_gtk_pid", F.lit(99))
     out = global_topk(df, [F.asc("id")], 2).collect()
     assert all(r._gtk_pid == 99 for r in out)
+
+
+def test_global_topk_orders_by_existing_rank_col(spark):
+    # order_cols may name an input column called rank_col: the local rank
+    # of phase 1 must not overwrite it before phase 2 orders by it
+    df = _fixture(spark).withColumnRenamed("score", "global_rank")
+    order = [F.desc("global_rank"), F.asc("id")]
+    k = 5
+    via_full = global_rank_running(df, order).filter(F.col("global_rank") <= k)
+    via_topk = global_topk(df, order, k)
+    assert sorted(map(tuple, via_topk.select("id", "global_rank").collect())) == sorted(
+        map(tuple, via_full.select("id", "global_rank").collect())
+    )
+    got = {r.id: r.global_rank for r in via_topk.collect()}
+    assert got == {5: 1, 10: 2, 0: 3, 2: 4, 1: 5}
