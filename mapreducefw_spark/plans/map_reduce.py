@@ -17,17 +17,24 @@ Reproduces the user-visible contract of ``RunMapReduceFramework``
      (shuffle drain order, ``MRFCore.cpp:145-172``) — preserved: Spark gives
      no intra-group order either.
   5. Reduce runs once per key, then the output is globally sorted ascending
-     by the output key (``MRFCore.cpp:418-420``) -> ``repartition`` of the
-     reduce output, then ``orderBy`` (range-partitioned sort). The
-     repartition makes AQE materialize the reduce output as a shuffle stage,
-     so the range partitioner's sampling job reads those shuffle files
-     instead of running every Python Reduce a second time.
+     by the output key (``MRFCore.cpp:418-420``) -> a ``rebalance`` of the
+     reduce output, then ``orderBy`` (range-partitioned sort). The rebalance
+     makes AQE materialize the reduce output as a shuffle stage, so the
+     range partitioner's sampling job reads those shuffle files instead of
+     running every Python Reduce a second time.
   6. Bag semantics: duplicates preserved end-to-end; NULL values legal
      (``Search.cpp:27``, ``SearchMRC.cpp:91``), NULL keys are not grouped away.
 
 All engine machinery of the reference (thread pools, chunk cursor, semaphore
 pipelining, per-thread buffers — ``MRFCore.cpp``) is deliberately absent:
 Spark's task scheduler, shuffle service, and AQE replace it wholesale.
+As with the reference's 10-item chunk cursor (``MRFCore.h:15``,
+``MRFCore.cpp:46-53``), the amount of work sets the task count: in local
+mode the Map input is rebalanced too, and AQE coalesces each rebalance by
+bytes (about ``max(total / defaultParallelism, 1 MB)`` a partition). Each
+Python task costs about 0.2 CPU-s to start before any user code runs
+(measured on a 4-vCPU host), so a small input runs its Map in one task
+while a multi-MB one still fans out to the cores.
 """
 
 from __future__ import annotations
@@ -61,16 +68,13 @@ def map_reduce(
     key_cols : intermediate key columns (the k2 of the reference model).
     sort_cols : output sort key; defaults to the first column of the output.
     """
-    from mapreducefw_spark.operators.textprep import ensure_parallelism
-
-    # single-row-group fixtures arrive as one partition, which would serialize
-    # the Python map stage onto one Arrow worker. Workers are reused, but each
-    # Python task has a fixed start-up cost, so no more than one wave of tasks
-    # (the default parallelism, at most 8)
-    n = df.sparkSession.sparkContext.defaultParallelism
-    mapped = ensure_parallelism(df, min_parts=min(8, n)).mapInPandas(
-        map_fn, schema=map_schema
-    )
+    # local inputs arrive split by file layout (one task for a single-row-group
+    # fixture, many for a pre-split frame); the rebalance lets AQE split the
+    # Map by bytes instead. A cluster's inputs arrive split, so they pass
+    # through unshuffled.
+    if df.sparkSession.sparkContext.master.startswith("local"):
+        df = df.hint("rebalance")
+    mapped = df.mapInPandas(map_fn, schema=map_schema)
     reduced = mapped.groupBy(*key_cols).applyInPandas(
         lambda pdf: reduce_fn(pdf), schema=out_schema
     )
@@ -78,7 +82,7 @@ def map_reduce(
         sort_cols = [reduced.schema.fieldNames()[0]]
     # step 5: the range sort's sampler reads this exchange's shuffle files
     # instead of re-running the Python reduce stage
-    return reduced.repartition(n).orderBy(*sort_cols)
+    return reduced.hint("rebalance").orderBy(*sort_cols)
 
 
 def map_reduce_rows(

@@ -17,6 +17,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from mapreducefw_spark.plans.map_reduce import map_reduce, map_reduce_rows
 
@@ -161,3 +162,65 @@ def test_null_values_legal(spark):
         out_schema="k3 string, v3 string",
     ).collect()
     assert [(r.k3, r.v3) for r in out] == [("p1", None), ("p2", None)]
+
+
+def _first_char_job(df, calls):
+    """map_reduce keyed by each row's first character. ``calls`` counts Map
+    calls: mapInPandas calls the Map function once per task."""
+
+    def map_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        calls.add(1)
+        for pdf in batches:
+            yield pd.DataFrame({"k2": pdf["text"].str[:1].to_numpy()})
+
+    def reduce_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({"k3": [pdf["k2"].iloc[0]], "v3": [len(pdf)]})
+
+    return map_reduce(
+        df,
+        map_fn,
+        reduce_fn,
+        map_schema="k2 string",
+        out_schema="k3 string, v3 bigint",
+    )
+
+
+def _map_tasks(spark, df) -> int:
+    calls = spark.sparkContext.accumulator(0)
+    _first_char_job(df, calls).collect()
+    return calls.value
+
+
+def test_tiny_input_runs_one_map_task(spark, words_df):
+    """A few bytes of input are worth one Python task, not one per core."""
+    assert _map_tasks(spark, words_df) == 1
+
+
+def test_presplit_tiny_input_runs_one_map_task(spark, words_df):
+    """The input's own split does not set the Map fan-out either."""
+    assert _map_tasks(spark, words_df.repartition(16)) == 1
+
+
+def test_multi_mb_input_still_fans_out(spark):
+    """~6 MB of hex digests is more than one byte-sized Map task."""
+    df = spark.range(100_000).select(
+        F.sha2(F.col("id").cast("string"), 256).alias("text")
+    )
+    assert _map_tasks(spark, df) > 1
+
+
+def _below_map(out) -> str:
+    """The physical plan under MapInPandas (the plan is a chain, so every
+    later line of the tree string lies below it)."""
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan, plan
+    return plan.split("MapInPandas", 1)[1]
+
+
+def test_cluster_master_adds_no_exchange_below_map(spark, words_df, monkeypatch):
+    """Local inputs get a rebalance before the Map; a cluster's inputs
+    arrive split and pass through unshuffled."""
+    calls = spark.sparkContext.accumulator(0)
+    assert "Exchange RoundRobinPartitioning" in _below_map(_first_char_job(words_df, calls))
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+    assert "Exchange" not in _below_map(_first_char_job(words_df, calls))

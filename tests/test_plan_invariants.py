@@ -253,3 +253,21 @@ def test_headline_plan_invariants(headline_plans, name):
             f"{name}: broadcast joins {a['broadcast_joins']} < "
             f"{MIN_BROADCAST[name]}\n{plan}"
         )
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda df: df.hint("rebalance"),
+        lambda df: df.repartition(2),
+        lambda df: df.groupBy().count(),
+    ],
+    ids=["rebalance", "repartition_n", "global_aggregate"],
+)
+def test_audit_counts_round_robin_and_single_partition_exchanges(spark, build):
+    """Round-robin exchanges and a global aggregate's gather to one task
+    shuffle too, so each counts in ``shuffles``."""
+    df = build(spark.range(100))
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert audit(plan)["shuffles"] == 1, plan

@@ -26,6 +26,11 @@ def final_section(plan: str) -> str:
     return plan
 
 
+# every partitioning a shuffle exchange prints: key-hashed, range-sorted,
+# round-robin (repartition(n) and rebalance) and a global gather to one task
+_EXCHANGES = ("hashpartitioning", "rangepartitioning", "RoundRobinPartitioning", "SinglePartition")
+
+
 def audit(plan: str) -> dict:
     plan = final_section(plan)
     return {
@@ -36,8 +41,7 @@ def audit(plan: str) -> dict:
         "broadcast_joins": plan.count("BroadcastHashJoin"),
         "sortmerge_joins": plan.count("SortMergeJoin"),
         "bnl_joins": plan.count("BroadcastNestedLoopJoin"),
-        "shuffles": plan.count("Exchange hashpartitioning")
-        + plan.count("Exchange rangepartitioning"),
+        "shuffles": sum(plan.count(f"Exchange {p}") for p in _EXCHANGES),
         "take_ordered": "TakeOrderedAndProject" in plan,
         "codegen_spans": len(set(re.findall(r"\*\((\d+)\)", plan))),
     }
