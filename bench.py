@@ -250,6 +250,75 @@ def _vs_prev(per_query: dict, total: float, prev: dict, prev_src: str) -> dict:
     return block
 
 
+def time_queries(
+    spark,
+    sf_dir: str,
+    names: list[str],
+    passes: int = 3,
+    warmup: bool = True,
+    failed: dict[str, str] | None = None,
+) -> tuple[dict[str, float], list[float]]:
+    """Time each query's noop-sink write: one untimed warm-up sweep, then
+    ``passes`` interleaved full passes. Returns each query's best time and
+    each pass's total. A query that raises propagates, unless ``failed`` is
+    a dict: then its error is recorded there and the query is skipped from
+    then on."""
+
+    def run(name: str) -> bool:
+        if failed is not None and name in failed:
+            return False
+        try:
+            QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        except Exception as e:
+            if failed is None:
+                raise
+            failed[name] = f"{e.__class__.__name__}: {' '.join(str(e).split())[:200]}"
+            _mark(f"FAILED {name}: {failed[name]}")
+            return False
+        return True
+
+    # Warm the WHOLE suite once untimed. JIT/codegen warm-up is shared
+    # across queries and keeps improving well past each query's own reps:
+    # in a controlled A/B the same queries ran 1.2-1.3x slower on the first
+    # full pass than on later passes regardless of clearCache. One untimed
+    # sweep moves every timed rep onto the warmed path, so diffs measure
+    # plans, not how cold the JVM was.
+    if warmup:
+        for name in names:
+            _mark(f"warmup {name}")
+            run(name)
+
+    # min over INTERLEAVED full passes (pass 1 times every query once, then
+    # pass 2, ...) instead of back-to-back reps per query. Back-to-back reps
+    # complete within seconds, so a single multi-minute noisy-neighbor
+    # window on a shared VM inflates ALL reps of a contiguous block of
+    # queries (SCALING.md round-13 notes). Interleaving puts ~a full pass
+    # between a query's reps, so one contention window can poison at most
+    # one of them and the min survives.
+    per_query: dict[str, float] = {}
+    pass_totals: list[float] = []
+    for rep in range(passes):
+        _mark(f"timing pass {rep + 1}/{passes}")
+        pass_total = 0.0
+        for name in names:
+            # cold cache each rep: a persist() surviving rep 1 would make
+            # rep 2 measure the cached path, not the real plan
+            spark.catalog.clearCache()
+            t0 = time.time()
+            if not run(name):
+                continue
+            el = time.time() - t0
+            pass_total += el
+            if name not in per_query or el < per_query[name]:
+                per_query[name] = el
+        pass_totals.append(round(pass_total, 3))
+    # a contended pass is visible here: one pass total far above the
+    # others means that pass's reps were inflated (and discarded by the
+    # per-query min wherever another pass was clean)
+    _mark(f"pass totals: {pass_totals}")
+    return {n: round(v, 3) for n, v in per_query.items()}, pass_totals
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -257,15 +326,6 @@ def main() -> None:
     spark = get_spark(app_name="mapreducefw-bench", cpus=cpus)
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None
 
-    # Warm the WHOLE suite once untimed. Root-cause of the round-2 "1.4x
-    # regressions" (q1/q3/q5/filter_predicates/sessionization, code unchanged):
-    # JIT/codegen warm-up is shared across queries and keeps improving well
-    # past each query's own 3 reps — in a controlled A/B this session, the
-    # same queries ran 1.2-1.3x slower on the first full pass than on later
-    # passes regardless of clearCache, and converged to (slightly better than)
-    # round-1 times at steady state. One untimed sweep moves every timed rep
-    # onto the warmed path, so round-over-round diffs measure plans, not how
-    # cold the JVM happened to be when the driver ran the bench.
     # One attribution line up front: which headline plans contain an
     # unpartitioned window frame AT ALL (expected: exactly the CI
     # allowlist in tests/test_plan_invariants.py — sequence_pack_spans'
@@ -291,41 +351,7 @@ def main() -> None:
             frames[name] = n
     _mark(f"unpartitioned-window frames by query (allowlisted in CI): {frames}")
 
-    for name in HEADLINE:
-        _mark(f"warmup {name}")
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-
-    # min of 3 reps per query, INTERLEAVED as three separated full passes
-    # over the suite (pass 1 times every query once, then pass 2, then
-    # pass 3) instead of 3 back-to-back reps per query. Back-to-back reps
-    # complete within seconds, so a single multi-minute noisy-neighbor
-    # window on this shared VM inflates ALL reps of a contiguous block of
-    # queries — two r13 runs each flagged a >3x "regression" block that
-    # was a DIFFERENT, disjoint query set, every member of which re-probed
-    # in-band individually (SCALING.md round-13 notes). Interleaving puts
-    # ~a full pass between a query's reps, so one contention window can
-    # poison at most one of its three reps and the min survives.
-    per_query: dict[str, float] = {}
-    pass_totals: list[float] = []
-    for rep in range(3):
-        _mark(f"timing pass {rep + 1}/3")
-        pass_total = 0.0
-        for name in HEADLINE:
-            # cold cache each rep: a persist() surviving rep 1 would make
-            # rep 2 measure the cached path, not the real plan
-            spark.catalog.clearCache()
-            t0 = time.time()
-            QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-            el = time.time() - t0
-            pass_total += el
-            if name not in per_query or el < per_query[name]:
-                per_query[name] = el
-        pass_totals.append(round(pass_total, 3))
-    per_query = {n: round(v, 3) for n, v in per_query.items()}
-    # a contended pass is visible here: one pass total far above the
-    # other two means that pass's reps were inflated (and discarded by
-    # the per-query min wherever another pass was clean)
-    _mark(f"pass totals: {pass_totals}")
+    per_query, pass_totals = time_queries(spark, sf_dir, HEADLINE)
 
     total = round(sum(per_query.values()), 3)
     result = {

@@ -1,6 +1,7 @@
 """In-pytest differential smoke: a representative query subset vs DuckDB at
 sf0.001, exact equality — keeps `pytest` self-contained as a regression gate
-(the full 93-query sweep lives in tools/check_oracle.py / drive_entry.py)."""
+(the full registry sweep is tools/check_oracle.py, with --vanilla for the
+driver's own session)."""
 
 from __future__ import annotations
 

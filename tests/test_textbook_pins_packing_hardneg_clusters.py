@@ -1,4 +1,4 @@
-"""Third-implementation pins for the round-10 additions.
+"""Third-implementation pins: padding waste, hard negatives, dedup clusters.
 
 `padding_waste_report` and `hard_negative_pairs` share their algebra with
 their DuckDB oracles (I authored both sides), so a transcription bug could

@@ -1,4 +1,4 @@
-"""Third-implementation pins for the remaining round-9 additions.
+"""Third-implementation pins: trend test, hapax and stop-gram stats, dup matrix.
 
 `cochran_armitage_trend`, `hapax_legomena_stats` and
 `cross_source_dup_matrix` share their algebra with their DuckDB oracles,
