@@ -12,7 +12,14 @@ upgrades the posture only where it matters:
 - local master -> ``localCheckpoint`` (the measured fixture path, no
   change to any bench plan or timing);
 - cluster master WITH a configured checkpoint dir -> reliable
-  ``checkpoint`` (HDFS/object-store replicated; survives executor loss);
+  ``checkpoint`` (HDFS/object-store replicated; survives executor loss).
+  The frame is persisted first: Spark writes a reliable checkpoint with a
+  job of its own after the first action, and without the cache that job
+  recomputes the whole lineage. An eager pin unpersists once the files
+  are written; a lazy one stays cached until ``unpersist``,
+  ``spark.catalog.clearCache()`` or eviction. ``get_spark`` enables
+  ``spark.cleaner.referenceTracking.cleanCheckpoints`` so a superseded
+  round's checkpoint files are deleted once nothing references them;
 - cluster master WITHOUT one -> ``localCheckpoint`` with the
   accept-recompute caveat documented here: the operator still works, but
   an executor loss costs a full query retry instead of a task retry.
@@ -38,5 +45,8 @@ def pin(df: DataFrame, *, eager: bool = False) -> DataFrame:
     every path — only the resilience of the materialized copy differs."""
     sc = df.sparkSession.sparkContext
     if not sc.master.startswith("local") and sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
+        out = df.persist().checkpoint(eager=eager)
+        if eager:
+            df.unpersist()
+        return out
     return df.localCheckpoint(eager=eager)

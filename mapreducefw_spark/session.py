@@ -42,6 +42,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # delete a reliable checkpoint's files once its RDD is unreferenced
+        # (operators.persist.pin checkpoints each round on a cluster)
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_WAREHOUSE_DIR", os.path.join(tempfile.gettempdir(), "mrfw-warehouse")),

@@ -4,12 +4,39 @@ Mirrors the reference's in-memory source (``MapReduceFramework.h:13``,
 ``MRFCore.cpp:448-454``) generalized to schema-on-read parquet scans: Catalyst
 gets predicate pushdown + column pruning for free, and partition-parallel
 reads replace the chunked shared-cursor scheduler (``MRFCore.cpp:46-53``).
+
+The reference reads its input once; here every query loads its tables
+again, and ``spark.read.parquet`` infers the schema on each load with a
+Spark job that reads the file's footer. ``parquet_schema`` memoizes the
+``StructType`` that Spark inferred, and every load reads with it
+(``spark.read.schema(s).parquet`` builds the frame with no job and no
+footer read).
+
+- **Key**: the absolute path; a fingerprint of the file, ``(st_size,
+  st_mtime_ns, st_ino)``, or of every entry under a directory; and the
+  session confs that change how Parquet types map to Spark types
+  (``_TYPE_CONFS``). A path that cannot be stat'ed (a remote URI) is
+  inferred on every load.
+- **Invalidation**: a rewritten file or directory changes the fingerprint
+  (short of a same-size rewrite in place within the file system's
+  timestamp granularity), and a changed conf (``nanosAsLong`` for the
+  events table) changes the key, so either infers again. A ``StructType``
+  does not depend on the session, so the key holds no session identity.
+- **The schema, never the DataFrame**: every load is a fresh read with
+  fresh attribute ids, so two loads of one table self-join without
+  ambiguity, exactly as two inferring reads did.
+- **Bound**: the memo is cleared when it reaches ``_SCHEMA_CACHE_MAX``
+  entries, as ``operators.textprep`` bounds its partition-count probes.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -23,6 +50,45 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+# Session confs that change the schema Spark infers from a Parquet footer.
+_TYPE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+_SCHEMA_CACHE_MAX = 256
+
+
+def _fingerprint(path: str) -> tuple:
+    """``(size, mtime_ns, inode)`` of a file; for a directory, each entry's
+    name and fingerprint. Raises ``OSError`` if ``path`` is not local."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns, st.st_ino)
+    with os.scandir(path) as entries:
+        return tuple(sorted((e.name, _fingerprint(e.path)) for e in entries))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the Parquet file or directory at
+    ``path``, inferred once per file version and type-mapping confs (see
+    the module docstring)."""
+    try:
+        key = (os.path.abspath(path), _fingerprint(path), tuple(spark.conf.get(k, None) for k in _TYPE_CONFS))
+    except OSError:
+        return spark.read.parquet(path).schema
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        if len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
+            _SCHEMA_CACHE.clear()
+        _SCHEMA_CACHE[key] = schema
+    return schema
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -70,13 +136,14 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-        return normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    return normalize_event_ts(df) if name == "events" else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

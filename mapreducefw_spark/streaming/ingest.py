@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreducefw_spark.sources.tables import parquet_schema
 from mapreducefw_spark.streaming.staging import stage_single_file_dir
 
 QUALITY_MIN_TOKENS = 20
@@ -29,10 +30,9 @@ def corpus_stream(spark: SparkSession, sf_dir: str, *, max_files_per_trigger: in
     """readStream over the documents parquet (symlink-staged: the file
     stream source wants a directory)."""
     src = f"{sf_dir}/documents.parquet"
-    static = spark.read.parquet(src)
     stage = stage_single_file_dir(src, "mrfw_docstream")
     return (
-        spark.readStream.schema(static.schema)
+        spark.readStream.schema(parquet_schema(spark, src))
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(stage)
     )

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from mapreducefw_spark.queries._util import t
 from mapreducefw_spark.session import tune_session
-from mapreducefw_spark.sources.tables import normalize_event_ts
+from mapreducefw_spark.sources.tables import normalize_event_ts, parquet_schema
 from mapreducefw_spark.streaming.staging import stage_single_file_dir
 
 
@@ -23,11 +23,10 @@ def events_stream(spark: SparkSession, sf_dir: str, *, max_files_per_trigger: in
     ts (nanos-as-long or TIMESTAMP_NTZ) exactly like the batch loader."""
     tune_session(spark)
     src = f"{sf_dir}/events.parquet"
-    static = spark.read.parquet(src)
     # FileStreamSource needs a directory; stage a symlink dir over the file
     stage = stage_single_file_dir(src, "mrfw_stream")
     stream = (
-        spark.readStream.schema(static.schema)
+        spark.readStream.schema(parquet_schema(spark, src))
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(stage)
     )

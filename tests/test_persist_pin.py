@@ -4,19 +4,21 @@ cluster branches are checked with a mocked non-local master."""
 from __future__ import annotations
 
 import pytest
+from pyspark import StorageLevel
 
 from mapreducefw_spark.operators.persist import pin
 
 
 @pytest.fixture
 def chosen(spark, monkeypatch):
-    """Record which checkpoint method ``pin`` calls instead of running it."""
+    """Record which checkpoint method ``pin`` calls, and whether the frame
+    it is called on is persisted, instead of running it."""
     calls = []
     frame_type = type(spark.range(1))
 
     def record(name):
         def method(self, eager=True):
-            calls.append((name, eager))
+            calls.append((name, eager, self.storageLevel != StorageLevel.NONE))
             return self
 
         return method
@@ -39,6 +41,21 @@ def test_pin_branch(spark, monkeypatch, chosen, master, checkpoint_dir, expected
     monkeypatch.setattr(sc, "master", master)
     monkeypatch.setattr(sc, "getCheckpointDir", lambda: checkpoint_dir)
     df = spark.range(3)
-    assert pin(df) is df
-    assert pin(df, eager=True) is df
-    assert chosen == [(expected, False), (expected, True)]
+    try:
+        assert pin(df) is df
+        # a reliable checkpoint reads a persisted frame, so writing its
+        # files does not recompute the lineage; a local one is untouched
+        reliable = expected == "checkpoint"
+        assert chosen == [(expected, False, reliable)]
+        assert pin(df, eager=True) is df
+        assert chosen[1] == (expected, True, reliable)
+        # an eager pin has written its files: the cache is released
+        assert df.storageLevel == StorageLevel.NONE
+    finally:
+        df.unpersist()
+
+
+def test_get_spark_cleans_checkpoints(spark):
+    """Superseded round checkpoints are deleted once unreferenced."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
