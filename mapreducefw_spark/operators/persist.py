@@ -9,7 +9,9 @@ and fails the job — the wrong default for corpus-sized frames at 100 TB
 critical). ``pin`` keeps the local-mode behavior bit-identical and
 upgrades the posture only where it matters:
 
-- local master -> ``localCheckpoint`` (the measured fixture path, no
+- local master (``session.is_local_master``: ``local[N]``; a
+  ``local-cluster[...]`` master has real executors and counts as a
+  cluster) -> ``localCheckpoint`` (the measured fixture path, no
   change to any bench plan or timing);
 - cluster master WITH a configured checkpoint dir -> reliable
   ``checkpoint`` (HDFS/object-store replicated; survives executor loss).
@@ -38,13 +40,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from mapreducefw_spark.session import is_local_master
+
 
 def pin(df: DataFrame, *, eager: bool = False) -> DataFrame:
     """Materialize ``df`` once and truncate lineage, with storage chosen
     by deployment (see module docstring). Values/rows are identical on
     every path — only the resilience of the materialized copy differs."""
     sc = df.sparkSession.sparkContext
-    if not sc.master.startswith("local") and sc.getCheckpointDir() is not None:
+    if not is_local_master(sc) and sc.getCheckpointDir() is not None:
         out = df.persist().checkpoint(eager=eager)
         if eager:
             df.unpersist()

@@ -11,6 +11,8 @@ import weakref
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreducefw_spark.session import is_local_master
+
 # DataFrames this function already spread (or verified as spread), mapped to
 # the partition count they are guaranteed to have — identity marker, so
 # re-application inside stacked operators costs zero py4j calls (and a later
@@ -58,7 +60,7 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     Repartition nodes yet leave the data badly split, which is exactly the
     serialization this function exists to prevent."""
     sc = df.sparkSession.sparkContext
-    if not sc.master.startswith("local"):
+    if not is_local_master(sc):
         return df
     # sf0.1 fixtures already split into enough tasks, where a blind
     # repartition measured 1.3x on the jaccard join; single-row-group small

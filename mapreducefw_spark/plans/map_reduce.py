@@ -46,6 +46,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from mapreducefw_spark.session import is_local_master
+
 
 def map_reduce(
     df: DataFrame,
@@ -72,7 +74,7 @@ def map_reduce(
     # fixture, many for a pre-split frame); the rebalance lets AQE split the
     # Map by bytes instead. A cluster's inputs arrive split, so they pass
     # through unshuffled.
-    if df.sparkSession.sparkContext.master.startswith("local"):
+    if is_local_master(df.sparkSession.sparkContext):
         df = df.hint("rebalance")
     mapped = df.mapInPandas(map_fn, schema=map_schema)
     reduced = mapped.groupBy(*key_cols).applyInPandas(

@@ -14,8 +14,10 @@ the same code is correct on a multi-executor cluster at 100 TB:
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -55,6 +57,13 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def is_local_master(sc: SparkContext) -> bool:
+    """True for a single-JVM master (``local``, ``local[N]``, ``local[*]``,
+    ``local[N,F]``). ``local-cluster[...]`` starts separate executors, so
+    it is a cluster: executor loss and input splits behave as on one."""
+    return re.fullmatch(r"local(\[(\d+|\*)(\s*,\s*\d+)?\])?", sc.master) is not None
 
 
 def tune_session(spark: SparkSession) -> SparkSession:

@@ -219,8 +219,10 @@ def _below_map(out) -> str:
 
 def test_cluster_master_adds_no_exchange_below_map(spark, words_df, monkeypatch):
     """Local inputs get a rebalance before the Map; a cluster's inputs
-    arrive split and pass through unshuffled."""
+    arrive split and pass through unshuffled. ``local-cluster`` runs
+    separate executors, so it is a cluster."""
     calls = spark.sparkContext.accumulator(0)
     assert "Exchange RoundRobinPartitioning" in _below_map(_first_char_job(words_df, calls))
-    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
-    assert "Exchange" not in _below_map(_first_char_job(words_df, calls))
+    for master in ("spark://cluster:7077", "local-cluster[2,1,1024]"):
+        monkeypatch.setattr(spark.sparkContext, "master", master)
+        assert "Exchange" not in _below_map(_first_char_job(words_df, calls)), master

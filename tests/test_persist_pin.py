@@ -7,6 +7,7 @@ import pytest
 from pyspark import StorageLevel
 
 from mapreducefw_spark.operators.persist import pin
+from mapreducefw_spark.session import is_local_master
 
 
 @pytest.fixture
@@ -34,6 +35,9 @@ def chosen(spark, monkeypatch):
         ("local[8]", "/ckpt", "localCheckpoint"),
         ("spark://cluster:7077", "/ckpt", "checkpoint"),
         ("spark://cluster:7077", None, "localCheckpoint"),
+        # separate executor JVMs: a local checkpoint dies with one of them
+        ("local-cluster[2,1,1024]", "/ckpt", "checkpoint"),
+        ("local-cluster[2,1,1024]", None, "localCheckpoint"),
     ],
 )
 def test_pin_branch(spark, monkeypatch, chosen, master, checkpoint_dir, expected):
@@ -59,3 +63,22 @@ def test_get_spark_cleans_checkpoints(spark):
     """Superseded round checkpoints are deleted once unreferenced."""
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+
+
+@pytest.mark.parametrize(
+    "master, local",
+    [
+        ("local", True),
+        ("local[8]", True),
+        ("local[*]", True),
+        ("local[4,2]", True),
+        ("local[*, 3]", True),
+        ("local-cluster[2,1,1024]", False),
+        ("spark://cluster:7077", False),
+        ("yarn", False),
+    ],
+)
+def test_is_local_master(spark, monkeypatch, master, local):
+    sc = spark.sparkContext
+    monkeypatch.setattr(sc, "master", master)
+    assert is_local_master(sc) is local
