@@ -145,10 +145,9 @@ def copurchase_edges(li: DataFrame) -> DataFrame:
     # 2-column lineitem scan is 3 tasks at sf0.1 (single-digit row
     # groups), so the broadcast-join pair explosion (600k rows -> 2.4M
     # pairs, stage-probed 2.7s wall / 2.7 CPU-s CPU-BOUND on those 3
-    # tasks) serializes there. ensure_parallelism's partition-count gate
-    # works on a scan (pre-shuffle), unlike the post-shuffle
-    # AQE-coalesce-class sites measured as losses this round; distinct
-    # pairs are placement-free.
+    # tasks; the rows can sit in one of them) serializes there.
+    # ensure_parallelism spreads the scan over every local core before the
+    # join; distinct pairs are placement-free.
     li = ensure_parallelism(li)
     a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
     b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))

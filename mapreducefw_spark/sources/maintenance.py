@@ -130,11 +130,6 @@ def compact_parquet(
     os.rename(path, old)
     os.rename(staging, path)
     shutil.rmtree(old)
-    # the files under `path` just changed: memoized partition-count probes
-    # for plans reading this path are now stale
-    from mapreducefw_spark.operators.textprep import invalidate_probe_cache
-
-    invalidate_probe_cache()
     written = sum(
         1
         for root, _dirs, files in os.walk(path)

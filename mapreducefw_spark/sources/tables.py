@@ -26,7 +26,7 @@ footer read).
   fresh attribute ids, so two loads of one table self-join without
   ambiguity, exactly as two inferring reads did.
 - **Bound**: the memo is cleared when it reaches ``_SCHEMA_CACHE_MAX``
-  entries, as ``operators.textprep`` bounds its partition-count probes.
+  entries, so a long-lived session cannot grow it without limit.
 """
 
 from __future__ import annotations

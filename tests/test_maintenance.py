@@ -191,20 +191,6 @@ def test_compaction_recovery_restores_newest_of_multiple_old_dirs(spark, sf_dir,
     assert not os.path.exists(f"{target}__compact_ffffffff_old")
 
 
-def test_compact_parquet_invalidates_probe_cache(spark, sf_dir, tmp_path):
-    """compact_parquet rewrites files in place: any memoized partition-count
-    probe for a plan over that path is stale and must be dropped."""
-    from mapreducefw_spark.operators import textprep
-
-    target = str(tmp_path / "ds3")
-    t(spark, sf_dir, "orders").repartition(6).write.parquet(target)
-    df = spark.read.parquet(target)
-    textprep.ensure_parallelism(df, min_parts=4)  # populates the probe cache
-    assert textprep._PROBE_CACHE  # seeded
-    maintenance.compact_parquet(spark, target, target_file_bytes=1 << 30)
-    assert not textprep._PROBE_CACHE  # dropped by the rewrite
-
-
 def test_compaction_with_zorder_clustering(spark, tmp_path):
     """compact_parquet(cluster_by=...) makes the compaction shuffle double
     as an OPTIMIZE ZORDER: data survives exactly, and the rewritten files'

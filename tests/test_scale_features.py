@@ -107,26 +107,59 @@ def test_salted_aggregate_partition_invariant(spark, sf_dir):
     assert a == b
 
 
+def _partition_sizes(df):
+    return df.rdd.glom().map(len).collect()
+
+
 def test_ensure_parallelism_spreads_upstream_coalesce(spark, sf_dir):
-    """An upstream coalesce(1) (which plants a Repartition node in the plan)
-    must still get spread — the gate is the actual partition count, not the
-    presence of a repartition node."""
+    """A coalesce(1) frame comes back with one non-empty partition per
+    local core."""
     from mapreducefw_spark.operators.textprep import ensure_parallelism
 
     squeezed = t(spark, sf_dir, "documents").coalesce(1)
-    assert squeezed.rdd.getNumPartitions() == 1
-    spread = ensure_parallelism(squeezed, min_parts=8)
-    assert spread.rdd.getNumPartitions() >= 8
+    sizes = _partition_sizes(ensure_parallelism(squeezed))
+    assert len(sizes) == spark.sparkContext.defaultParallelism
+    assert min(sizes) > 0, sizes
+
+
+def test_ensure_parallelism_spreads_lumped_partitions(spark):
+    """Eight partitions with every row in one are still spread: the input's
+    partition count says nothing about where its rows are."""
+    from mapreducefw_spark.operators.textprep import ensure_parallelism
+
+    lumped = spark.range(500).repartition(8, F.lit(0))
+    assert sorted(_partition_sizes(lumped))[-2:] == [0, 500]
+    sizes = _partition_sizes(ensure_parallelism(lumped))
+    assert sum(sizes) == 500
+    assert sum(1 for n in sizes if n) >= 2, sizes
 
 
 def test_ensure_parallelism_idempotent_no_double_shuffle(spark, sf_dir):
-    """Re-applying to an already-spread frame adds no second exchange."""
+    """A second call across a filter and a projection adds no second
+    exchange."""
     from mapreducefw_spark.operators.textprep import ensure_parallelism
 
-    once = ensure_parallelism(t(spark, sf_dir, "documents").coalesce(1), min_parts=8)
-    twice = ensure_parallelism(once, min_parts=8)
-    plan = twice._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Repartition") <= 1, plan
+    once = ensure_parallelism(t(spark, sf_dir, "documents").coalesce(1))
+    twice = ensure_parallelism(once.filter(F.col("doc_id") > 0).select("doc_id", "text"))
+    plan = twice._jdf.queryExecution().executedPlan().toString()
+    # an executed AQE plan prints its final plan above the initial one
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Exchange") == 1, plan
+
+
+@pytest.mark.parametrize(
+    "master,cores", [("local-cluster[2,1,1024]", 4), ("local[1]", 1), ("local", 1)]
+)
+def test_ensure_parallelism_passes_through(spark, sf_dir, monkeypatch, master, cores):
+    """A cluster master and a one-core local master get the frame back
+    unchanged."""
+    from mapreducefw_spark.operators.textprep import ensure_parallelism
+
+    sc = spark.sparkContext
+    monkeypatch.setattr(sc, "master", master)
+    monkeypatch.setattr(type(sc), "defaultParallelism", cores)
+    df = t(spark, sf_dir, "documents")
+    assert ensure_parallelism(df) is df
 
 
 def test_global_rank_two_phase_equals_window_form(spark, sf_dir):
