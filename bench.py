@@ -190,6 +190,14 @@ def _unpartitioned_windows(df) -> int:
     )
 
 
+def codegen_compiles(spark) -> int:
+    """Generated classes the session's JVM has compiled so far (Spark's
+    CodegenMetrics). A warm pass that compiles many is rebuilding code it
+    already had: evicted from the codegen cache, or fresh per build."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 CALIBRATORS = ("q1_pricing_summary", "snapshot_diff", "mr_wordcount")
 
 
@@ -257,12 +265,14 @@ def time_queries(
     passes: int = 3,
     warmup: bool = True,
     failed: dict[str, str] | None = None,
+    compiles: list[int] | None = None,
 ) -> tuple[dict[str, float], list[float]]:
     """Time each query's noop-sink write: one untimed warm-up sweep, then
     ``passes`` interleaved full passes. Returns each query's best time and
     each pass's total. A query that raises propagates, unless ``failed`` is
     a dict: then its error is recorded there and the query is skipped from
-    then on."""
+    then on. If ``compiles`` is a list, each pass appends the number of
+    generated classes the session compiled during it."""
 
     def run(name: str) -> bool:
         if failed is not None and name in failed:
@@ -300,6 +310,7 @@ def time_queries(
     for rep in range(passes):
         _mark(f"timing pass {rep + 1}/{passes}")
         pass_total = 0.0
+        compiled0 = codegen_compiles(spark)
         for name in names:
             # cold cache each rep: a persist() surviving rep 1 would make
             # rep 2 measure the cached path, not the real plan
@@ -312,6 +323,8 @@ def time_queries(
             if name not in per_query or el < per_query[name]:
                 per_query[name] = el
         pass_totals.append(round(pass_total, 3))
+        if compiles is not None:
+            compiles.append(codegen_compiles(spark) - compiled0)
     # a contended pass is visible here: one pass total far above the
     # others means that pass's reps were inflated (and discarded by the
     # per-query min wherever another pass was clean)
@@ -351,7 +364,8 @@ def main() -> None:
             frames[name] = n
     _mark(f"unpartitioned-window frames by query (allowlisted in CI): {frames}")
 
-    per_query, pass_totals = time_queries(spark, sf_dir, HEADLINE)
+    compiles: list[int] = []
+    per_query, pass_totals = time_queries(spark, sf_dir, HEADLINE, compiles=compiles)
 
     total = round(sum(per_query.values()), 3)
     result = {
@@ -360,6 +374,7 @@ def main() -> None:
         "unit": "sec",
         "queries": per_query,
         "pass_totals": pass_totals,
+        "codegen_compiles": compiles,
         "sf": sf,
         "cpus": int(cpus),
     }
@@ -428,6 +443,7 @@ def main() -> None:
             "cpus": result["cpus"],
             "n_queries": len(per_query),
             "pass_totals": pass_totals,
+            "codegen_compiles": compiles,
             "queries_file": "BENCH_FULL.json",
         }
         if "vs_prev" in result:
