@@ -9,10 +9,34 @@ Reproduces the user-visible contract of ``RunMapReduceFramework``
      -> ``DataFrame.mapInPandas`` (Arrow-batched iterator, 1->N rows).
   2. Shuffle groups by VALUE equality of the intermediate key — the reference
      derives equality from ``operator<`` order-equivalence (``MRFCore.h:19-23``),
-     which for sanely ordered keys is value equality. -> ``groupBy``.
+     which for sanely ordered keys is value equality. -> a hash
+     ``repartition`` on the key, then ``sortWithinPartitions``, so each
+     key's rows are adjacent in one Reduce task. Keys group as ``groupBy``
+     groups them: NULL with NULL, ``0.0`` with ``-0.0``, NaN with NaN, and a
+     NULL key apart from a NaN one.
   3. Reduce sees ALL values of one key in a single call (``V2_VEC&``,
      ``MapReduceClient.h:50``) and may emit 0..N output rows; there is no
-     combiner. -> ``groupBy().applyInPandas`` (GROUPED_MAP).
+     combiner. -> one ``mapInPandas`` kernel per Reduce task
+     (``_sorted_reduce_kernel``) reads the task's rows as one key-sorted
+     Arrow stream, cuts each batch where the key changes, carries the last
+     key's rows into the next batch, and calls Reduce once per key. The
+     non-empty outputs of a batch go back as one frame. The grouped map
+     this replaces (``groupBy().applyInPandas``) paid a fixed cost for every
+     key: the JVM wrote each key as its own Arrow stream, and each key's
+     rows and each output crossed between Arrow and pandas on their own.
+     A word count over 30k tokens on ``local[4]`` (4-core host) cost 1.61
+     CPU-s with 256 keys and 5.89 with 2,866 keys that way, against 1.50
+     and 2.76 now: each extra key costs about 0.5 ms instead of 1.6 ms,
+     and about a third of the 0.5 ms is the user's own ``pd.DataFrame``.
+     Each key's frame is the one a per-key conversion gives: a fresh
+     ``RangeIndex``, and an integral (boolean) column arrives with its
+     NumPy integer (``bool``) dtype for a key without NULLs in it and as
+     ``float64`` with NaN (``object`` with None) for a key with one. For
+     that, integral and boolean columns cross the boundary NULL-free next
+     to a NULL-flag column, and the kernel puts each key's NULLs back, so a
+     ``bigint`` keeps all 64 bits. Integral and boolean values nested in an
+     array or struct follow their whole batch instead (a batch with one
+     NULL inner value gives every key ``float64`` inner arrays).
   4. Value order within a group is nondeterministic in the reference
      (shuffle drain order, ``MRFCore.cpp:145-172``) — preserved: Spark gives
      no intra-group order either.
@@ -42,9 +66,18 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DoubleType,
+    FloatType,
+    IntegralType,
+    StructType,
+)
 
 from mapreducefw_spark.session import is_local_master
 
@@ -77,14 +110,161 @@ def map_reduce(
     if is_local_master(df.sparkSession.sparkContext):
         df = df.hint("rebalance")
     mapped = df.mapInPandas(map_fn, schema=map_schema)
-    reduced = mapped.groupBy(*key_cols).applyInPandas(
-        lambda pdf: reduce_fn(pdf), schema=out_schema
-    )
+    reduced = _reduce_sorted_stream(mapped, reduce_fn, list(key_cols), out_schema)
     if sort_cols is None:
         sort_cols = [reduced.schema.fieldNames()[0]]
     # step 5: the range sort's sampler reads this exchange's shuffle files
     # instead of re-running the Python reduce stage
     return reduced.hint("rebalance").orderBy(*sort_cols)
+
+
+def _reduce_sorted_stream(
+    mapped: DataFrame,
+    reduce_fn: Callable[[pd.DataFrame], pd.DataFrame],
+    key_cols: list[str],
+    out_schema: str,
+) -> DataFrame:
+    """Step 3 (module docstring): each Reduce task's rows, sorted by key, go
+    to one ``mapInPandas`` kernel that calls ``reduce_fn`` once per key."""
+    fields = mapped.schema.fields
+    names = [f.name for f in fields]
+    keys = {names.index(k) for k in key_cols}
+    quoted = ["`" + n.replace("`", "``") + "`" for n in names]
+    exprs = list(quoted)
+    # (column position, its NULL flag's position, "int" | "bool" | None)
+    flagged: list[tuple[int, int, str | None]] = []
+    for i, f in enumerate(fields):
+        t = f.dataType
+        kind = "int" if isinstance(t, IntegralType) else "bool" if isinstance(t, BooleanType) else None
+        # a float key needs its flag to tell a NULL key from NaN: pandas reads both as NaN
+        if kind is None and not (i in keys and isinstance(t, (FloatType, DoubleType))):
+            continue
+        flag = f"_null_{i}"
+        while flag in names:
+            flag = "_" + flag
+        flagged.append((i, len(exprs), kind))
+        if kind is not None:
+            zero = "0" if kind == "int" else "false"
+            exprs[i] = f"coalesce({quoted[i]}, CAST({zero} AS {t.simpleString()})) AS {quoted[i]}"
+        exprs.append(f"{quoted[i]} IS NULL AS {flag}")
+    if key_cols:
+        stream = mapped.repartition(*key_cols).sortWithinPartitions(*key_cols)
+    else:  # no key columns: all rows form one key, as with groupBy()
+        stream = mapped.repartition(1)
+    if flagged:
+        stream = stream.selectExpr(*exprs)
+    compare = sorted(keys) + [j for i, j, _ in flagged if i in keys]
+    nested = [i for i in keys if isinstance(fields[i].dataType, (ArrayType, StructType))]
+    kernel = _sorted_reduce_kernel(reduce_fn, len(names), compare, nested, flagged)
+    return stream.mapInPandas(kernel, schema=out_schema)
+
+
+def _sorted_reduce_kernel(
+    reduce_fn: Callable[[pd.DataFrame], pd.DataFrame],
+    width: int,
+    compare: list[int],
+    nested: list[int],
+    flagged: list[tuple[int, int, str | None]],
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The ``mapInPandas`` kernel of step 3. It and its helpers are closures,
+    so cloudpickle ships them by value and a worker never imports this
+    package.
+
+    Each batch holds the ``width`` columns Reduce sees, then the NULL flags
+    of ``flagged``. A row starts a new key when any ``compare`` column
+    differs from the row before it (NaN equal to NaN, NULL to NULL);
+    ``nested`` (array or struct) keys compare as canonical tuples.
+    """
+    nan = ("NaN",)
+
+    def canon(v):
+        # groupBy equality for a nested key: -0.0 is 0.0 and NaN is NaN
+        if isinstance(v, (float, np.floating)):
+            return nan if v != v else v + 0.0
+        if isinstance(v, dict):
+            return tuple(canon(x) for x in v.values())
+        if isinstance(v, (list, tuple, np.ndarray)):
+            return tuple(canon(x) for x in v)
+        return v
+
+    def starts(batch: pd.DataFrame) -> np.ndarray:
+        """Rows of ``batch`` whose key differs from the row before."""
+        new = np.zeros(len(batch) - 1, dtype=bool)
+        for i in compare:
+            a = batch.iloc[:, i].to_numpy()
+            if i in nested:
+                a = np.fromiter((canon(v) for v in a), dtype=object, count=len(a))
+            na = pd.isna(a)
+            new |= ~((a[1:] == a[:-1]) | (na[1:] & na[:-1]))
+        return np.flatnonzero(new) + 1
+
+    def reduce_key(pieces: list[tuple[pd.DataFrame, np.ndarray | None]]) -> pd.DataFrame:
+        """Reduce one key's rows, framed as a per-key Arrow -> pandas
+        conversion frames them: own RangeIndex, and NULLs back in place."""
+        if len(pieces) == 1:
+            g, null = pieces[0][0].copy(), pieces[0][1]
+        else:
+            g = pd.concat([p for p, _ in pieces])
+            null = None if not flagged else np.concatenate([n for _, n in pieces])
+        g.index = pd.RangeIndex(len(g))
+        if null is not None:
+            for f, (i, _, kind) in enumerate(flagged):
+                if kind is None or not null[:, f].any():
+                    continue
+                v = g.iloc[:, i].to_numpy(dtype="float64" if kind == "int" else object, copy=True)
+                v[null[:, f]] = np.nan if kind == "int" else None
+                g.isetitem(i, v)
+        return reduce_fn(g)
+
+    def emit(outs: list[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        """One frame per run of non-empty outputs with the same columns and
+        dtypes, so ``concat`` never aligns or widens what one output had."""
+        run: list[pd.DataFrame] = []
+        sig = None
+        for o in outs:
+            if not len(o):
+                continue
+            s = (list(o.columns), [c.dtype for _, c in o.items()])
+            if run and s != sig:
+                yield run[0] if len(run) == 1 else pd.concat(run, ignore_index=True)
+                run = []
+            run.append(o)
+            sig = s
+        if run:
+            yield run[0] if len(run) == 1 else pd.concat(run, ignore_index=True)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # the last key seen, as (rows, NULL flags) pieces: it may go on in
+        # the next batch
+        open_key: list[tuple[pd.DataFrame, np.ndarray | None]] = []
+        last = None  # the open key's last row
+        for batch in batches:
+            if not len(batch):
+                continue
+            cuts = starts(batch)
+            if last is None or len(starts(pd.concat([last, batch.iloc[:1]]))):
+                cuts = np.concatenate(([0], cuts))
+            last = batch.iloc[-1:]
+            data = batch.iloc[:, :width] if flagged else batch
+            null = batch.iloc[:, width:].to_numpy(dtype=bool) if flagged else None
+            pieces = [
+                (data.iloc[s:e], None if null is None else null[s:e])
+                for s, e in zip(np.concatenate(([0], cuts)), np.concatenate((cuts, [len(batch)])))
+                if e > s
+            ]
+            if not len(cuts):
+                open_key += pieces
+                continue
+            if cuts[0]:
+                open_key.append(pieces.pop(0))
+            outs = [reduce_key(open_key)] if open_key else []
+            outs += [reduce_key([p]) for p in pieces[:-1]]
+            open_key = pieces[-1:]
+            yield from emit(outs)
+        if open_key:
+            yield from emit([reduce_key(open_key)])
+
+    return kernel
 
 
 def map_reduce_rows(

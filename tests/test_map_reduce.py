@@ -12,11 +12,13 @@ contract of RunMapReduceFramework (SURVEY §2A semantic points 1-6):
 
 from __future__ import annotations
 
+import sys
 from collections import defaultdict
 from collections.abc import Iterator
 
 import pandas as pd
 import pytest
+from pyspark import cloudpickle
 from pyspark.sql import functions as F
 
 from mapreducefw_spark.plans.map_reduce import map_reduce, map_reduce_rows
@@ -210,11 +212,12 @@ def test_multi_mb_input_still_fans_out(spark):
 
 
 def _below_map(out) -> str:
-    """The physical plan under MapInPandas (the plan is a chain, so every
-    later line of the tree string lies below it)."""
+    """The physical plan under the Map's MapInPandas. The Reduce is a
+    MapInPandas too, above the Map; the plan is a chain, so the Map is the
+    last occurrence and every later line of the tree string lies below it."""
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan, plan
-    return plan.split("MapInPandas", 1)[1]
+    assert plan.count("MapInPandas") == 2, plan
+    return plan.rsplit("MapInPandas", 1)[1]
 
 
 def test_cluster_master_adds_no_exchange_below_map(spark, words_df, monkeypatch):
@@ -226,3 +229,196 @@ def test_cluster_master_adds_no_exchange_below_map(spark, words_df, monkeypatch)
     for master in ("spark://cluster:7077", "local-cluster[2,1,1024]"):
         monkeypatch.setattr(spark.sparkContext, "master", master)
         assert "Exchange" not in _below_map(_first_char_job(words_df, calls)), master
+
+
+# -- step 3 against Spark's own grouped map ---------------------------------
+# The adapter reduces each task's key-sorted rows in one mapInPandas kernel.
+# These tests run the same Reduce through ``groupBy().applyInPandas`` inside
+# the test and require the same rows: every key reaches Reduce once, with all
+# of its rows, grouped and typed as a per-key Arrow conversion gives them.
+
+
+# a lambda: cloudpickle ships it by value (workers cannot import this module)
+_identity_map = lambda batches: batches  # noqa: E731
+
+
+def _via_adapter(df, reduce_fn, out_schema, key_cols, map_fn=_identity_map, map_schema=None):
+    out = map_reduce(
+        df,
+        map_fn,
+        reduce_fn,
+        map_schema=map_schema or df.schema.simpleString(),
+        out_schema=out_schema,
+        key_cols=key_cols,
+    )
+    return sorted(tuple(r) for r in out.collect())
+
+
+def _via_grouped_map(df, reduce_fn, out_schema, key_cols, map_fn=_identity_map, map_schema=None):
+    """The same job with Spark's grouped map as its Reduce."""
+    mapped = df.mapInPandas(map_fn, schema=map_schema or df.schema.simpleString())
+    out = mapped.groupBy(*key_cols).applyInPandas(reduce_fn, schema=out_schema)
+    return sorted(tuple(r) for r in out.collect())
+
+
+def _describer():
+    """A Reduce that describes its key in one row: the size, each column's
+    dtype and values (sorted by repr, since value order within a key is
+    unspecified), and the index. Built in a function so that cloudpickle
+    ships it by value: workers cannot import this test module."""
+
+    def describe(pdf: pd.DataFrame) -> pd.DataFrame:
+        cols = "; ".join(f"{c}:{pdf[c].dtype}:{sorted(map(repr, pdf[c].tolist()))}" for c in pdf.columns)
+        return pd.DataFrame({"n": [len(pdf)], "cols": [cols], "index": [repr(pdf.index.tolist())]})
+
+    return describe
+
+
+_describe = _describer()
+_DESCRIBE_SCHEMA = "n bigint, cols string, index string"
+
+
+def _same_as_grouped_map(df, key_cols, map_fn=_identity_map, map_schema=None):
+    got = _via_adapter(df, _describe, _DESCRIBE_SCHEMA, key_cols, map_fn, map_schema)
+    assert got == _via_grouped_map(df, _describe, _DESCRIBE_SCHEMA, key_cols, map_fn, map_schema)
+    return got
+
+
+def test_key_spanning_arrow_batches_reaches_reduce_once(spark):
+    """With 3-row Arrow batches, keys of 1 to 10 rows span up to four
+    batches; each still reaches Reduce once, with all of its rows."""
+    rows = [(k, i) for k, n in (("a", 10), ("b", 1), ("c", 7), ("d", 3), ("e", 2)) for i in range(n)]
+    df = spark.createDataFrame(rows, "k2 string, v2 int").repartition(1)
+    calls = spark.sparkContext.accumulator(0)
+
+    def reduce_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        calls.add(1)
+        return _describe(pdf)
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        got = _via_adapter(df, reduce_fn, _DESCRIBE_SCHEMA, ["k2"])
+        want = _via_grouped_map(df, _describe, _DESCRIBE_SCHEMA, ["k2"])
+    finally:
+        spark.conf.set(conf, old)
+    assert got == want
+    assert sorted(n for n, _, _ in got) == [1, 2, 3, 7, 10]
+    assert calls.value == 5
+
+
+def test_null_only_under_one_key_keeps_other_keys_dtypes(spark):
+    """An int, a bigint and a boolean column that are NULL only under key
+    'a' arrive as float64/object for 'a' alone: every other key of the same
+    batch gets int32, int64 (all 64 bits) and bool, as per key Arrow gives."""
+    big = 2**60 + 1
+    rows = [("a", 0, 0, False, True), ("a", 1, 5, True, False)] + [
+        (f"k{i}", i, big + i, i % 2 == 0, False) for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, "k2 string, i int, l bigint, b boolean, null boolean").coalesce(1)
+
+    def map_fn(batches):
+        # the Map makes the NULLs: object columns keep every bigint exact
+        for pdf in batches:
+            out = pdf[["k2", "i", "l", "b"]].astype(object)
+            out.loc[pdf["null"].to_numpy(), ["i", "l", "b"]] = None
+            yield out
+
+    schema = "k2 string, i int, l bigint, b boolean"
+    got = {c.split(";")[0]: c for _, c, _ in _same_as_grouped_map(df, ["k2"], map_fn, schema)}
+    a = got["k2:object:[\"'a'\", \"'a'\"]"]
+    assert "i:float64" in a and "l:float64" in a and "b:object" in a
+    k3 = got["k2:object:[\"'k3'\"]"]
+    assert "i:int32:['3']" in k3 and f"l:int64:['{big + 3}']" in k3 and "b:bool:['False']" in k3
+
+
+def test_null_and_signed_zero_keys_group_as_groupby(spark):
+    """NULL keys form one group, 0.0 and -0.0 form one, NaN keys one, and a
+    NULL key stays apart from a NaN key, though pandas reads both as NaN."""
+    rows = [(0, "null1"), (0, "null2"), (1, "zero"), (2, "negzero"), (2, "negzero2"),
+            (3, "nan1"), (3, "nan2"), (4, "x")]
+    df = spark.createDataFrame(rows, "code int, v2 string").coalesce(1)
+
+    def map_fn(batches):
+        import pyarrow as pa
+
+        keys = [None, 0.0, -0.0, float("nan"), 1.5]
+        for pdf in batches:
+            # Arrow-backed, so NaN stays NaN: a NumPy NaN would reach Spark as NULL
+            k2 = pa.array([keys[c] for c in pdf["code"]], type=pa.float64(), from_pandas=False)
+            yield pd.DataFrame({"k2": pd.arrays.ArrowExtensionArray(k2), "v2": pdf["v2"]})
+
+    got = _same_as_grouped_map(df, ["k2"], map_fn, "k2 double, v2 string")
+    assert sorted(n for n, _, _ in got) == [1, 2, 2, 3]
+    # sorted NULLs first and NaN last, so these two keys are adjacent
+    got = _same_as_grouped_map(df.filter("code IN (0, 3)"), ["k2"], map_fn, "k2 double, v2 string")
+    assert sorted(n for n, _, _ in got) == [2, 2]
+    strings = spark.createDataFrame([(None, 1), (None, 2), ("", 3)], "k2 string, v2 int").coalesce(1)
+    assert sorted(n for n, _, _ in _same_as_grouped_map(strings, ["k2"])) == [1, 2]
+
+
+def test_multi_column_keys(spark):
+    """Keys of several columns, one of them an int with NULLs: a key
+    changes when any of its columns does."""
+    rows = [("a", 1, 1.0), ("a", 1, 2.0), ("a", None, 3.0), ("a", None, 4.0), ("a", 0, 5.0),
+            ("b", 1, 6.0), (None, 1, 7.0), (None, None, 8.0)]
+    df = spark.createDataFrame(rows, "k1 string, k2 int, v double").coalesce(1)
+    got = _same_as_grouped_map(df, ["k1", "k2"])
+    assert sorted(n for n, _, _ in got) == [1, 1, 1, 1, 2, 2]
+
+
+def test_array_and_struct_keys(spark):
+    """Nested keys group by value too, with [0.0] and [-0.0] as one key."""
+    rows = [([0.0], (1, "a"), 1), ([-0.0], (1, "a"), 2), ([0.0], (1, "b"), 3), ([1.0, 2.0], (3, "c"), 4),
+            ([1.0, 2.0], (3, "c"), 5), (None, (2, None), 6), (None, (2, None), 7), ([], (1, "a"), 8)]
+    df = spark.createDataFrame(rows, "a array<double>, s struct<x: int, y: string>, v int").coalesce(1)
+    assert sorted(n for n, _, _ in _same_as_grouped_map(df, ["a"])) == [1, 2, 2, 3]
+    assert sorted(n for n, _, _ in _same_as_grouped_map(df, ["a", "s"])) == [1, 1, 2, 2, 2]
+
+
+def test_empty_reduce_outputs_are_dropped(spark):
+    """A Reduce output with 0 rows, or the column-less ``pd.DataFrame()``
+    that map_reduce_rows returns for a key with no emits, adds no row."""
+    df = spark.createDataFrame([(k, i) for k in "abcdef" for i in range(3)], "k2 string, v2 int")
+
+    def reduce_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        k = pdf["k2"].iloc[0]
+        if k in "ab":
+            return pd.DataFrame()
+        if k in "cd":
+            return pd.DataFrame({"k3": pd.Series([], dtype=object), "v3": pd.Series([], dtype="int64")})
+        return pd.DataFrame({"k3": [k], "v3": [int(pdf["v2"].sum())]})
+
+    schema = "k3 string, v3 bigint"
+    got = _via_adapter(df, reduce_fn, schema, ["k2"])
+    assert got == _via_grouped_map(df, reduce_fn, schema, ["k2"]) == [("e", 3), ("f", 3)]
+
+    def rows_reduce(key, pdf):
+        return [] if key[0] in "abcd" else [{"k3": key[0], "v3": len(pdf)}]
+
+    out = map_reduce_rows(
+        df, lambda row: [(row["k2"], row["v2"])], rows_reduce,
+        map_schema="k2 string, v2 int", out_schema=schema,
+    ).collect()
+    assert [tuple(r) for r in out] == [("e", 3), ("f", 3)]
+
+
+def test_shipped_reduce_imports_nothing_from_the_package(spark, words_df, monkeypatch):
+    """The Reduce kernel is pickled by value: a worker that cannot import
+    ``mapreducefw_spark`` still unpickles and runs it."""
+    shipped = []
+    real = type(words_df).mapInPandas
+
+    def spy(self, func, schema, *args, **kwargs):
+        shipped.append(func)
+        return real(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(type(words_df), "mapInPandas", spy)
+    _first_char_job(words_df, spark.sparkContext.accumulator(0))
+    kernel = cloudpickle.dumps(shipped[-1])  # the Map is shipped first
+    for name in [m for m in sys.modules if m.split(".")[0] == "mapreducefw_spark"]:
+        monkeypatch.setitem(sys.modules, name, None)  # a failing import
+    batch = pd.DataFrame({"k2": ["a", "a", "b"]})
+    out = pd.concat(list(cloudpickle.loads(kernel)(iter([batch]))))
+    assert out.values.tolist() == [["a", 2], ["b", 1]]
