@@ -58,24 +58,6 @@ def stratified_sample(
     )
 
 
-def quality_bins(
-    df: DataFrame,
-    score_col: Column,
-    *,
-    n_bins: int = 10,
-) -> DataFrame:
-    """Attach ``bin`` (1..n_bins, 1 = highest score) by ntile over the
-    corpus-wide score order — the curriculum / mixture binning step.
-
-    ntile is a global window: fine when the scored frame is an aggregate,
-    but for raw 100 TB corpora rank with the two-phase global rank
-    (operators/rank.py) and derive the bin as ceil(rank * n / count); this
-    helper exists for the common case where scores are computed per doc and
-    the binning runs over a sampled or aggregated frame."""
-    w = W.orderBy(score_col.desc())
-    return df.withColumn("bin", F.ntile(n_bins).over(w))
-
-
 def token_budget_waterfill(
     per_source: DataFrame,
     budget: int | float | Column,

@@ -412,7 +412,6 @@ def semantic_dedup(
     threshold: float = 0.4,
     kmeans_iters: int = 1,
     max_cell_size: int | None = None,
-    vectorized: bool = True,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): k-means-partition the embedding space, then compare
@@ -445,10 +444,9 @@ def semantic_dedup(
     # Vectorized (Arrow/numpy) assignment is the scale path — the
     # expression-tree fold costs ~18us per (row, centroid) interpreted and
     # n_cells grows with the corpus under the SemDeDup deployment rule.
-    assign = assign_cells_vectorized if vectorized else assign_ivf_cells
     # One materialization: both join sides and the output read the same
     # assignment (kmeans lineage would otherwise re-run per branch).
-    cells = assign(corpus, centroids).localCheckpoint(eager=False)
+    cells = assign_cells_vectorized(corpus, centroids).localCheckpoint(eager=False)
     compare = cells
     if max_cell_size is not None:
         w = W.partitionBy("cell").orderBy("vid")

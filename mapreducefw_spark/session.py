@@ -56,8 +56,8 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """``extra_conf`` entries are applied LAST (they win) — for tools that
-    need a static conf the defaults pin, e.g. the shuffle probe enabling
-    the UI/REST metrics endpoint."""
+    need a static conf the defaults pin, e.g. perfbench's ``session_conf``
+    turning on an uncompressed event log for its tracer."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     shuffle_partitions = shuffle_partitions or int(cpus)
     builder = (
