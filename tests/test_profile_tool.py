@@ -1,9 +1,8 @@
-"""Pin the schema of the run record that tools/profile.py prints: per-query
+"""Pin the schema of the run record that tools/layer_profile.py prints: per-query
 layers from perfbench's tracer, a stage list per query, and the oracle
 verdicts, for one Catalyst-only query and one that runs jobs and pins its
 state while it is built. Also pin how ``--shuffle-md`` rewrites SHUFFLE.md."""
 
-import importlib.util
 import json
 import subprocess
 import sys
@@ -12,6 +11,10 @@ from pathlib import Path
 import pytest
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO / "tools"))
+
+from layer_profile import shuffle_md  # noqa: E402
+
 TIMEOUT_S = 600  # about 50 s on a 4-core host
 
 PER_OP_KEYS = {
@@ -31,7 +34,7 @@ Q1, LPA = "q1_pricing_summary", "label_propagation_communities"
 @pytest.fixture(scope="module")
 def record():
     proc = subprocess.run(
-        [sys.executable, str(REPO / "tools" / "profile.py"), Q1, LPA, "--sf", "0.001"],
+        [sys.executable, str(REPO / "tools" / "layer_profile.py"), Q1, LPA, "--sf", "0.001"],
         cwd=REPO, capture_output=True, text=True, timeout=TIMEOUT_S,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
@@ -72,21 +75,7 @@ def test_walls_cpu_verdicts_and_session(record):
     assert record["session"]["driver_memory"]
 
 
-@pytest.fixture
-def profile_tool(monkeypatch):
-    """tools/profile.py as a module; it rewrites sys.path and imports perfbench's modules."""
-    monkeypatch.setattr(sys, "path", list(sys.path))
-    before = set(sys.modules)
-    spec = importlib.util.spec_from_file_location("profile_tool", REPO / "tools" / "profile.py")
-    module = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(module)
-    yield module
-    for name in set(sys.modules) - before:
-        if str(getattr(sys.modules[name], "__file__", "")).startswith(str(REPO / "perfbench")):
-            del sys.modules[name]
-
-
-def test_shuffle_md_measures_every_row_and_shows_failures(profile_tool, tmp_path):
+def test_shuffle_md_measures_every_row_and_shows_failures(tmp_path):
     for table, size in (("lineitem", 2_000_000), ("orders", 600_000), ("customer", 400_000)):
         (tmp_path / f"{table}.parquet").write_bytes(bytes(size))
     md = (
@@ -104,9 +93,9 @@ def test_shuffle_md_measures_every_row_and_shows_failures(profile_tool, tmp_path
         "op_failures": {"c": 2},
         "per_op": {n: {"spark.shuffle_write_bytes": 1_000_000.0} for n in "abc"},
     }
-    out = profile_tool.shuffle_md(md, rows, record, tmp_path, 0.1).splitlines()
+    out = shuffle_md(md, rows, record, tmp_path, 0.1).splitlines()
     assert out[0] == ("# SHUFFLE — bytes shuffled vs on-disk input per query "
-                      "(tools/profile.py --shuffle-md, sf0.1, 4 cores, driver memory 2g)")
+                      "(tools/layer_profile.py --shuffle-md, sf0.1, 4 cores, driver memory 2g)")
     assert out[1:6] == md.splitlines()[1:6]
     assert out[6:] == [
         "| a | lineitem | 2.000 MB | 1.000 MB | 0.500 | why a |",

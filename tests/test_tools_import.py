@@ -1,7 +1,10 @@
-"""Import every script under tools/ without running it, so a moved module
-or a deleted helper fails here rather than on the next person who runs
-the tool. Each import runs in its own interpreter: the tools put the repo
-and perfbench/ on sys.path."""
+"""Load every script under tools/ the way ``python tools/X.py`` does, without
+running its main, so a moved module or a deleted helper fails here rather
+than on the next person who runs the tool. Each load runs in its own
+interpreter whose sys.path[0] is tools/, as under script execution, and
+then imports pyspark there: a tool named after a standard-library module
+(``profile``, which pyspark's cProfile imports) would shadow it for every
+tool and fail that import."""
 
 import subprocess
 import sys
@@ -11,16 +14,17 @@ import pytest
 
 TOOLS = sorted((Path(__file__).resolve().parent.parent / "tools").glob("*.py"))
 
-IMPORT = """
-import importlib.util, sys
-spec = importlib.util.spec_from_file_location("tool_under_test", sys.argv[1])
-module = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(module)
-assert callable(module.main), "no main()"
+LOAD = """
+import runpy, sys
+from pathlib import Path
+sys.path[0] = str(Path(sys.argv[1]).parent)
+tool = runpy.run_path(sys.argv[1], run_name="tool_under_test")
+assert callable(tool.get("main")), "no main()"
+import pyspark
 """
 
 
 @pytest.mark.parametrize("path", TOOLS, ids=lambda p: p.name)
-def test_tool_imports(path):
-    proc = subprocess.run([sys.executable, "-c", IMPORT, str(path)], capture_output=True, text=True, timeout=120)
+def test_tool_loads_as_a_script(path):
+    proc = subprocess.run([sys.executable, "-c", LOAD, str(path)], capture_output=True, text=True, timeout=120)
     assert proc.returncode == 0, proc.stderr[-4000:]

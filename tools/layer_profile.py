@@ -1,5 +1,5 @@
 """Profile registered queries through perfbench's traced run:
-``python tools/profile.py <query...> [--sf F] [--plans DIR] [--shuffle-md]``.
+``python tools/layer_profile.py <query...> [--sf F] [--plans DIR] [--shuffle-md]``.
 
 Runs them as a perfbench ``Registry`` at scale ``--sf`` in the traced session
 of ``run.py --trace 1`` (``local[4]``, event log, no UI) and prints the record
@@ -16,8 +16,7 @@ import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
-# without tools/ on sys.path: this file would shadow the stdlib `profile` that cProfile imports
-sys.path[:] = [str(REPO), str(REPO / "perfbench")] + [p for p in sys.path if Path(p).resolve() != REPO / "tools"]
+sys.path[:0] = [str(REPO), str(REPO / "perfbench")]
 
 import run  # noqa: E402
 from layers import UNITS  # noqa: E402
@@ -53,7 +52,7 @@ def stage_lists(log_dir: Path, tag: str) -> dict[str, list[dict]]:
 def shuffle_md(md: str, rows: list[list[str]], record: dict, data_dir: Path, sf: float) -> str:
     """SHUFFLE.md, whose table ends the file, with its title and table rows measured anew."""
     lines, cfg = md.splitlines(), record["session"]
-    lines[0] = (f"# SHUFFLE — bytes shuffled vs on-disk input per query (tools/profile.py --shuffle-md, "
+    lines[0] = (f"# SHUFFLE — bytes shuffled vs on-disk input per query (tools/layer_profile.py --shuffle-md, "
                 f"sf{sf:g}, {cfg['cores']} cores, driver memory {cfg['driver_memory']})")
     lines = lines[:next(i for i, line in enumerate(lines) if line.startswith("|")) + 2]  # to the table's rule
     for name, tables, *_, why in rows:
